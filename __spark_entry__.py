@@ -1447,7 +1447,10 @@ def q_dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT all-pairs Jaccard via prefix filtering — oracle-checked against
-    a full O(n²) DuckDB scan (no blocking columns)."""
+    a full O(n²) DuckDB scan (no blocking columns). Exact over 60-bit
+    hashed shingles on both sides: a shingle collision (about n²/2^61 for
+    n distinct shingles) merges two shingles and can move a Jaccard
+    either way."""
     docs = _t(spark, sf_dir, "documents")
     return dedup.jaccard_dedup_prefix(docs, threshold=0.5, ngram=3)
 

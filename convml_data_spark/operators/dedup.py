@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.text import kgram_hashes, ngrams_from_tokens, tokens, winnow_select
 
@@ -188,7 +189,13 @@ def jaccard_dedup_prefix(
     the exact set intersection (plus the O(1) size-ratio filter).
 
     Returns (id_a, id_b, jaccard) — identical semantics to a full O(n²)
-    scan, so this IS oracle-checkable.
+    scan, so this IS oracle-checkable. "Exact" is over 60-bit hashed
+    shingles (:func:`_hashed_shingle_sets`): two distinct shingles that
+    collide count as one, which can move a pair's Jaccard either way
+    across the threshold. For n distinct shingles the chance of any
+    collision is about n²/2^61 (≈ 4·10⁻⁵ at 10⁷ distinct shingles); the
+    DuckDB twin hashes the same way, so engine and oracle agree
+    regardless.
     """
     from pyspark.sql import Window
     from pyspark.storagelevel import StorageLevel
@@ -717,6 +724,49 @@ def _small_star(e: DataFrame) -> DataFrame:
     )
 
 
+# Edge-list rows connected_components finishes on the driver: the same
+# 65,536-row cap as the other bounded driver states
+# (similarity._FIT_SAMPLE_CAP, corpus._CUT_SAMPLE_ROWS).
+_LOCAL_CC_MAX_EDGES = 65_536
+
+
+def _local_components(spark, rows, id_type: T.DataType) -> DataFrame:
+    """Min-root union-find over collected (u, v) rows → (id, component).
+    Each root is the minimum of its set (a union attaches the larger root
+    under the smaller), so the label is the minimum id reachable — the
+    order Spark's least/min uses for integral and UTF8_BINARY string ids.
+    A NULL id only arrives as the pair (NULL, NULL) and labels itself."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    parent = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for u, v in rows:
+        parent.setdefault(u, u)
+        parent.setdefault(v, v)
+        if u != v:
+            ru, rv = find(u), find(v)
+            if ru != rv:
+                parent[max(ru, rv)] = min(ru, rv)
+    ids = list(parent)
+    at = to_arrow_type(id_type)
+    table = pa.table(
+        {"id": pa.array(ids, at), "component": pa.array([find(x) for x in ids], at)}
+    )
+    # an Arrow table plans as LocalTableScan and starts no Python worker
+    # (a Python list plans as Scan ExistingRDD and does)
+    schema = T.StructType(
+        [T.StructField("id", id_type), T.StructField("component", id_type)]
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -732,49 +782,43 @@ def connected_components(
     duplicate cluster — the reference stops at pairwise filtering, but at
     corpus scale transitive near-dup chains must collapse together.
 
-    Algorithm: the ALTERNATING large-star/small-star algorithm (Kiveris et
-    al., "Connected Components in MapReduce and Beyond", SoCC'14, Alg. 2),
-    which contracts the EDGE SET toward per-component stars in O(log² n)
-    rounds regardless of graph diameter. (The previous min-label
-    propagation was O(diameter): a near-dup chain of length d — e.g.
-    successive crawl snapshots each similar to the last — needed d rounds;
-    measured 16 rounds at sf0.1 vs 4 for this formulation.)
+    The normalized (u ≤ v) pair list is materialized once with an eager
+    checkpoint; both the edge set and the node set derive from it, and
+    ``pairs`` is typically an expensive candidate-generation plan that
+    must not re-execute.
 
-    Scale design: edges only ever move through hash-partitioned groupBy
-    (min) and equi-joins — no driver-sized state, no cross product. TWO
-    alternating star rounds run per materialization (r18: each eager
-    checkpoint is one job launch + one AQE barrier chain + one block
-    write; fusing a large/small/large/small quartet into each
-    materialized step halves that per-round fixed cost — measured
-    ~0.6-1.2 s/round at sf0.1, partition-count-insensitive — while the
-    shuffles inside the step are unchanged). The convergence probe is a
-    four-scalar (count/sum/sum/hash-sum) ``observe()`` metric collected
-    DURING the step's eager checkpoint — zero extra jobs or scans per
-    step. Observation metrics are accumulator-backed, so a task retry or
-    speculative duplicate can distort a step's quadruple in EITHER
-    direction: a spurious mismatch only burns extra star rounds (star
-    rounds are idempotent at the fixed point), but a distorted quadruple
-    could in principle also coincide with the next step's and fake a
-    fixed point. The accumulator probe is therefore only a TRIGGER: when
-    two consecutive steps' observed quadruples match, the loop accepts
-    only on an exact-job check of the FIXED-POINT PROPERTY itself —
-    ``sigs(e) == sigs(small_star(large_star(e)))``, one union-of-aggs
-    job over the checkpointed blocks (computing one extra in-flight star
-    round), paid once per convergence, never per step. This is the same
-    acceptance condition the pre-r18 consecutive-set comparison tested
-    (e_k = R(e_{k-1}) equal to e_{k-1} ⟺ R at a fixed point), but stated
-    directly on the current edge set, so fusing rounds needs no 2-cycle
-    convergence argument: a genuine fixed point is accepted, anything
-    else (including a hypothetical period-2 orbit that fools the
-    trigger) fails the exact check and the loop continues. Residual
-    risk after the exact check is hash-sum collision between different
-    edge sets (three independent 64-bit hash sums + a count, ≈ 2^-192),
-    not retry noise. A checkpoint truncates lineage each step so the
-    plan does not grow with the iteration count (``durable`` picks the
-    mechanism — executor-local by default, reliable on request, see
-    :func:`~.persist.materialize_for_reuse`; observation metrics fire on
-    both checkpoint kinds). Only nodes that appear in ``pairs`` are
-    labelled (self-pairs label themselves).
+    Bounded driver finish: one ``limit(_LOCAL_CC_MAX_EDGES + 1)`` collect
+    reads the checkpointed blocks. When the list holds at most
+    ``_LOCAL_CC_MAX_EDGES`` (65,536) rows — the largest graph the
+    queries build at sf0.1 has 53,283 — a min-root union-find labels the
+    nodes on the driver and the result returns as a local Arrow relation:
+    one job instead of ~35 jobs of star rounds. The cap is the one every
+    bounded driver state in the package uses (the ANN fit sample, the
+    budget cut sample): a few MB of driver memory whatever the corpus
+    size, so driver state never grows with the data. Integral and
+    UTF8_BINARY string ids only — the orders where Python's min equals
+    Spark's.
+
+    Above the cap (or for other id types): the ALTERNATING
+    large-star/small-star algorithm (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", SoCC'14, Alg. 2), which contracts
+    the EDGE SET toward per-component stars in O(log² n) rounds regardless
+    of graph diameter. Edges only move through hash-partitioned groupBy
+    (min) and equi-joins — no driver-sized state, no cross product. Two
+    rounds run per eager checkpoint (the inner one through a lazy
+    checkpoint), which halves the per-round job launch and AQE barrier
+    cost. The convergence probe is a four-scalar (count/sum/sum/hash-sum)
+    ``observe()`` metric collected during each step's checkpoint — zero
+    extra jobs per step. Observation metrics are accumulator-backed, so a
+    task retry can distort them: a matching quadruple across two steps is
+    only a TRIGGER, accepted on an exact job that checks the fixed-point
+    property ``sigs(e) == sigs(small_star(large_star(e)))`` directly.
+    Residual risk is hash-sum collision between different edge sets
+    (≈ 2^-192). At most ``max_iters`` rounds run; a loop that stops
+    without a verified fixed point raises ``RuntimeError``. ``durable``
+    picks the checkpoint mechanism (see
+    :func:`~.persist.materialize_for_reuse`). Only nodes that appear in
+    ``pairs`` are labelled (self-pairs label themselves).
     """
     from pyspark.sql import Observation
 
@@ -804,11 +848,7 @@ def connected_components(
         m = obs.get
         return (m["n"], m["su"], m["sv"], m["sh"])
 
-    # materialize the normalized pair list ONCE: both the edge set and the
-    # node set derive from it, and `pairs` is typically an expensive
-    # candidate-generation plan (cosine scoring, LSH verify) that must not
-    # re-execute for the final node labelling. The initial signature rides
-    # on the same checkpoint execution via observe().
+    # the initial signature rides on the p0 checkpoint via observe()
     obs0 = Observation()
     p0 = (
         pairs.select(
@@ -818,6 +858,12 @@ def connected_components(
         .observe(obs0, *_sig_exprs())
     )
     p0 = materialize_for_reuse(p0, durable=durable, eager=True)
+    id_type = p0.schema["u"].dataType
+    if isinstance(id_type, T.IntegralType) or id_type == T.StringType():
+        # decided on the exact collect, never on the obs0 accumulator
+        rows = p0.limit(_LOCAL_CC_MAX_EDGES + 1).collect()
+        if len(rows) <= _LOCAL_CC_MAX_EDGES:
+            return _local_components(p0.sparkSession, rows, id_type)
     nodes = (
         p0.select(F.col("u").alias("id"))
         .unionAll(p0.select(F.col("v").alias("id")))
@@ -829,8 +875,7 @@ def connected_components(
         # ordinary aggregation jobs (not accumulator-backed): retries
         # cannot distort them. Verifies the fixed-point property
         # R(e) = e DIRECTLY: one union-of-aggs job that computes one
-        # star-round pair in flight over the checkpointed blocks — paid
-        # only at the convergence trigger, never per step.
+        # star-round pair in flight over the checkpointed blocks.
         rows = (
             d.agg(*_sig_exprs())
             .unionAll(_small_star(_large_star(d)).agg(*_sig_exprs()))
@@ -840,53 +885,45 @@ def connected_components(
         return a == b
 
     sig = _sig_of(obs0)
-    # Empty edge set (no pairs, or self-pairs only): zero star rounds are
-    # needed, and the loop's MID-PLAN observation below would never fire
-    # (AQE's runtime empty-relation propagation drops the inner
-    # CollectMetrics stage once a shuffle reports 0 rows — root-level
-    # observations survive, mid-plan ones do not). The n==0/NULL
-    # accumulator reading is only the TRIGGER; the skip is accepted on an
-    # exact isEmpty() probe, so a retry-distorted observation can cost
-    # one tiny job, never a wrong answer.
+    # Empty edge set (self-pairs only): zero star rounds are needed, and
+    # the loop's MID-PLAN observation below would never fire (AQE's
+    # runtime empty-relation propagation drops the inner CollectMetrics
+    # stage once a shuffle reports 0 rows). The n==0/NULL accumulator
+    # reading is only the TRIGGER; the skip is accepted on an exact
+    # isEmpty() probe.
     converged = not sig[0] and e.isEmpty()
-    if not converged:
-        for _ in range((max_iters + 1) // 2):
-            obs_out = Observation()
-            # two alternating star rounds per materialized step — ONE
-            # eager-checkpoint action per round PAIR instead of one per
-            # round. The inner round goes through a LAZY checkpoint: a
-            # star round references its input ~4 times (two adj
-            # projections, each feeding the min-agg and the re-attach
-            # join), and Catalyst plans a full subtree per reference, so
-            # naive composition re-executes the inner round ~4x inside
-            # the outer plan (measured 2x slower end-to-end). The lazy
-            # block fills exactly once INSIDE the outer step's eager
-            # action, keeping: one action per two rounds, every round's
-            # shuffles executed once, lineage truncated at both levels.
-            # (An inner observe() is impossible here — metrics never
-            # fire on lazily-checkpointed plans — so the trigger is
-            # cross-step: the quadruple two rounds apart. Detection lags
-            # one step behind the r17 per-round trigger at worst, and
-            # the extra rounds run over the already-contracted star set.)
-            inner = materialize_for_reuse(
-                _small_star(_large_star(e)), durable=durable
+    rounds = 0
+    while not converged and rounds < max_iters:
+        obs_out = Observation()
+        # up to two alternating star rounds per eager checkpoint. The
+        # inner round goes through a LAZY checkpoint: a star round
+        # references its input ~4 times and Catalyst plans a full subtree
+        # per reference, so naive composition re-executes the inner round
+        # ~4x inside the outer plan. The lazy block fills exactly once
+        # INSIDE the outer step's eager action. (Metrics never fire on
+        # lazily-checkpointed plans, so the trigger compares quadruples
+        # one step apart.)
+        step = _small_star(_large_star(e))
+        if max_iters - rounds >= 2:
+            step = _small_star(
+                _large_star(materialize_for_reuse(step, durable=durable))
             )
-            e = materialize_for_reuse(
-                _small_star(_large_star(inner)).observe(
-                    obs_out, *_sig_exprs()
-                ),
-                durable=durable,
-                eager=True,
-            )
-            new_sig = _sig_of(obs_out)
-            # accumulator match is only the trigger — accept only on an
-            # EXACT-job verification of the fixed-point property, so a
-            # retry-distorted observation can never end the loop early
-            # (and a trigger that is NOT a fixed point — the hypothetical
-            # 2-cycle — can never be accepted)
-            if new_sig == sig and _exact_fixed_point(e):
-                break
-            sig = new_sig
+            rounds += 2
+        else:
+            rounds += 1
+        e = materialize_for_reuse(
+            step.observe(obs_out, *_sig_exprs()), durable=durable, eager=True
+        )
+        new_sig = _sig_of(obs_out)
+        # accumulator match is only the trigger — accept only on the
+        # exact-job fixed-point check
+        converged = new_sig == sig and _exact_fixed_point(e)
+        sig = new_sig
+    if not converged and not _exact_fixed_point(e):
+        raise RuntimeError(
+            f"connected_components: no fixed point after {rounds} star rounds "
+            f"(max_iters={max_iters}); raise max_iters"
+        )
     # at the fixed point every component is a star centered at its minimum:
     # component(x) = min(neighbors ∪ {x}); unpaired/self-pair nodes keep
     # their own id via the left join
@@ -1404,6 +1441,10 @@ def containment_pairs(
     representation via ``Fraction(str(threshold))``), so thresholds
     where t·n lands on or adjacent to an integer cannot lose a boundary
     position to double rounding.
+    "Exact" is over 60-bit hashed shingles, as in
+    :func:`jaccard_dedup_prefix`: a collision merges two shingles (about
+    n²/2^61 for n distinct shingles) and can move a containment either
+    way; the DuckDB twin hashes the same way.
     """
     from pyspark.sql import Window
     from pyspark.storagelevel import StorageLevel

@@ -24,6 +24,23 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def cc_paths(monkeypatch):
+    """Runs a connected_components test body down both paths:
+    ``for path in cc_paths(): ...`` first at the shipped driver-finish
+    bound, then with the bound at -1, which sends every input (the empty
+    one included) through the distributed star loop. Yields the path
+    name for assertion messages."""
+    from convml_data_spark.operators import dedup
+
+    def paths():
+        for name, bound in (("local", dedup._LOCAL_CC_MAX_EDGES), ("loop", -1)):
+            monkeypatch.setattr(dedup, "_LOCAL_CC_MAX_EDGES", bound)
+            yield name
+
+    return paths
+
+
 @pytest.fixture(scope="session")
 def ddb():
     con = duckdb.connect()

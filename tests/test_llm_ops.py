@@ -391,8 +391,8 @@ def test_transform_registry_dispatch(spark):
         inference.apply_transform(emb, "umap")
 
 
-def test_connected_components_chain_star_isolated(spark):
-    """Min-label propagation + pointer jumping (dedup.py) collapses
+def test_connected_components_chain_star_isolated(spark, cc_paths):
+    """Both CC paths (dedup.py: driver union-find, star rounds) collapse
     multi-hop chains, stars, and leaves separate components untouched;
     convergence is independent of edge direction."""
     from convml_data_spark.operators.dedup import connected_components
@@ -403,24 +403,26 @@ def test_connected_components_chain_star_isolated(spark):
         + [(200, 201)]                           # pair
     )
     df = spark.createDataFrame(edges, "id_a long, id_b long")
-    got = {r["id"]: r["component"] for r in connected_components(df).collect()}
-    assert all(got[i] == 0 for i in range(11))
-    assert all(got[x] == 100 for x in range(100, 106))
-    assert got[200] == got[201] == 200
-
     rev = spark.createDataFrame([(i + 1, i) for i in range(15)], "id_a long, id_b long")
-    got_rev = {r["id"]: r["component"] for r in connected_components(rev).collect()}
-    assert set(got_rev.values()) == {0}
-
     empty = df.where("id_a < 0")
-    assert connected_components(empty).count() == 0
+    for path in cc_paths():
+        got = {r["id"]: r["component"] for r in connected_components(df).collect()}
+        assert all(got[i] == 0 for i in range(11)), path
+        assert all(got[x] == 100 for x in range(100, 106)), path
+        assert got[200] == got[201] == 200, path
+
+        got_rev = {r["id"]: r["component"] for r in connected_components(rev).collect()}
+        assert set(got_rev.values()) == {0}, path
+
+        assert connected_components(empty).count() == 0, path
 
 
-def test_connected_components_random_graphs_match_union_find(spark):
-    """Alternating large-star/small-star (dedup.py) equals a union-find
-    ground truth on randomized graphs spanning the hard shapes: long paths
-    (diameter >> log n), dense blocks, sparse forests, self-loops, and
-    non-contiguous 64-bit-ish ids."""
+def test_connected_components_random_graphs_match_union_find(spark, cc_paths):
+    """Both CC paths (dedup.py: driver union-find, alternating
+    large-star/small-star) equal a union-find ground truth on randomized
+    graphs spanning the hard shapes: long paths (diameter >> log n), dense
+    blocks, sparse forests, self-loops, and non-contiguous 64-bit-ish
+    ids."""
     import random
 
     rng = random.Random(1234)
@@ -457,8 +459,9 @@ def test_connected_components_random_graphs_match_union_find(spark):
         want = {x: min(members) for r, members in by_root.items() for x in members}
 
         df = spark.createDataFrame(edges, "id_a long, id_b long")
-        got = {r["id"]: r["component"] for r in connected_components(df).collect()}
-        assert got == want, f"trial {trial}: CC mismatch"
+        for path in cc_paths():
+            got = {r["id"]: r["component"] for r in connected_components(df).collect()}
+            assert got == want, f"trial {trial}, {path} path: CC mismatch"
 
 
 def test_best_survivors_argmax_quality_with_tiebreaks(spark):

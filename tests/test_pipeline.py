@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from convml_data_spark import pipeline
 from convml_data_spark.operators import inference, multimodal, windows
+from tests.conftest import SF_DIR
 
 SPEC = {
     "source": "synth",
@@ -760,9 +761,10 @@ def test_spec_round_trips_scene_filter_and_image_function():
 def test_curation_pipeline_job_count_bounded(spark):
     """The composed curation program must stay ONE bounded-job-count
     program (the r16-verdict composition gate): every stage is lazy
-    except connected_components' O(log² n) rounds, so the end-to-end
-    job count is a small constant plus a few jobs per CC round —
-    measured 86 jobs at sf0.001 (local[*], AQE on). A blowup here means
+    except connected_components, which finishes its sf0.001 graphs on the
+    driver after one checkpoint and one collect — measured 38 jobs at
+    sf0.001 (local[*], AQE on; 75 while CC ran its star rounds on every
+    graph). The bound is that plus 12 (about 30 %). A blowup here means
     a stage started materializing per-row or per-group driver state
     (e.g. an accidental action inside a loop), which no amount of
     cluster would save at 100 TB."""
@@ -779,9 +781,33 @@ def test_curation_pipeline_job_count_bounded(spark):
     finally:
         sc.setJobGroup("", "")
     jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert 0 < len(jobs) <= 120, (
-        f"curation pipeline ran {len(jobs)} jobs (bound 120) — a stage "
+    assert 0 < len(jobs) <= 50, (
+        f"curation pipeline ran {len(jobs)} jobs (bound 50) — a stage "
         "is no longer composing lazily"
+    )
+
+
+def test_dedup_components_construction_job_count_bounded(spark):
+    """Building ``dedup_components`` at sf0.01 runs at most 8 Spark jobs:
+    the cosine-pair candidate jobs, CC's one eager checkpoint and its one
+    collect (measured 6; 41-42 while CC ran its star rounds, whose
+    checkpoints and fixed-point probes all run during construction). A
+    rise means the driver finish stopped applying to a graph far below
+    its 65,536-edge bound, or a new action crept into construction."""
+    import __spark_entry__ as entrymod
+
+    sc = spark.sparkContext
+    group = "dedup-components-build"
+    sc.setJobGroup(group, "dedup_components construction job-count gate")
+    try:
+        entrymod.queries()["dedup_components"](
+            spark, os.path.join(os.path.dirname(SF_DIR), "sf0.01")
+        )
+    finally:
+        sc.setJobGroup("", "")
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 8, (
+        f"building dedup_components ran {len(jobs)} jobs (bound 8)"
     )
 
 

@@ -654,20 +654,59 @@ def test_mixture_rates_zero_token_source_gets_zero_rate(spark):
     assert rates["full"] == 1.0
 
 
-def test_connected_components_string_ids(spark):
+def test_connected_components_string_ids(spark, cc_paths):
     """CC works (and converges) on string ids — the normal id shape for
-    text dedup (URLs, content hashes)."""
+    text dedup (URLs, content hashes) — down both paths."""
     from convml_data_spark.operators.dedup import connected_components
 
     pairs = spark.createDataFrame(
         [("doc_a", "doc_b"), ("doc_b", "doc_c"), ("doc_x", "doc_y")],
         "id_a string, id_b string",
     )
-    comp = {r["id"]: r["component"] for r in connected_components(pairs).collect()}
-    assert comp == {
-        "doc_a": "doc_a", "doc_b": "doc_a", "doc_c": "doc_a",
-        "doc_x": "doc_x", "doc_y": "doc_x",
+    for path in cc_paths():
+        comp = {r["id"]: r["component"] for r in connected_components(pairs).collect()}
+        assert comp == {
+            "doc_a": "doc_a", "doc_b": "doc_a", "doc_c": "doc_a",
+            "doc_x": "doc_x", "doc_y": "doc_x",
+        }, path
+
+
+def test_connected_components_local_finish_edge_cases(spark, cc_paths):
+    """The driver finish (dedup.py::_local_components) matches the star
+    loop on the shapes it must special-case: non-ASCII string ids
+    (Python code-point order = Spark's UTF-8 byte order), a (NULL, NULL)
+    pair that keeps its (NULL, NULL) row, a (NULL, x) pair that is the
+    self-pair (x, x), self-pairs only, and an empty input. The local
+    result is an Arrow LocalTableScan — no RDD scan, no Python worker."""
+    import contextlib
+    import io
+
+    from convml_data_spark.operators.dedup import connected_components
+
+    # {é, z, ß} -> "z" (code point, not locale order); {😀, U+E000} ->
+    # U+E000 (UTF-8 byte order, not Java's UTF-16 order)
+    cases = {
+        "strings+null": (
+            [(None, None), (None, "a"), ("é", "z"), ("ß", "é"),
+             ("\U0001F600", "\ue000")],
+            {None: None, "a": "a", "z": "z", "é": "z", "ß": "z",
+             "\U0001F600": "\ue000", "\ue000": "\ue000"},
+        ),
+        "self-pairs": ([("s", "s"), ("t", "t")], {"s": "s", "t": "t"}),
+        "empty": ([], {}),
     }
+    for path in cc_paths():
+        for case, (rows, want) in cases.items():
+            df = spark.createDataFrame(rows, "id_a string, id_b string")
+            out = connected_components(df)
+            got = [(r["id"], r["component"]) for r in out.collect()]
+            assert dict(got) == want and len(got) == len(want), (path, case)
+            if path == "local":
+                buf = io.StringIO()
+                with contextlib.redirect_stdout(buf):
+                    out.explain()
+                assert "LocalTableScan" in buf.getvalue(), case
+                assert "ExistingRDD" not in buf.getvalue(), case
 
 
 def test_fit_sample_is_partition_layout_independent(spark):
@@ -952,27 +991,48 @@ def test_cc_round_set_identical_without_large_star_distinct(spark):
         assert mo == mn
 
 
-def test_connected_components_long_path_fused_steps(spark):
+def test_connected_components_long_path_fused_steps(spark, cc_paths):
     """r18 pin for the fused two-rounds-per-checkpoint CC loop (ADVICE
     r17: the distinct-removal pin never drove a run to its fixed point).
     A long path with scrambled non-monotone ids is the worst case for
     star contraction (diameter >> log n, min id in the middle): the run
     must cross several fused steps, fire the in-step convergence
     trigger, pass the exact fixed-point check, and label every node with
-    the component minimum."""
+    the component minimum. The driver finish must agree."""
     from convml_data_spark.operators.dedup import connected_components
 
     n = 200
     ids = [((i * 73) % n) * 1000 + 17 for i in range(n)]  # scrambled, distinct
     edges = [(ids[i], ids[i + 1]) for i in range(n - 1)]
     df = spark.createDataFrame(edges, "id_a long, id_b long")
-    got = {r["id"]: r["component"] for r in connected_components(df).collect()}
-    lo = min(ids)
-    assert len(got) == n
-    assert set(got.values()) == {lo}
+    for path in cc_paths():
+        got = {r["id"]: r["component"] for r in connected_components(df).collect()}
+        lo = min(ids)
+        assert len(got) == n, path
+        assert set(got.values()) == {lo}, path
 
 
-def test_connected_components_fixed_point_accept_is_exact(spark):
+def test_connected_components_round_budget_raises(spark, monkeypatch):
+    """The star loop runs at most ``max_iters`` rounds (two per fused
+    step, one in a final odd step) and raises, naming the rounds run,
+    when it stops without a verified fixed point — it never returns
+    labels from a non-fixed-point edge set. The 200-node scrambled path
+    needs far more than 2 rounds."""
+    import pytest
+
+    from convml_data_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "_LOCAL_CC_MAX_EDGES", -1)  # force the loop
+    n = 200
+    ids = [((i * 73) % n) * 1000 + 17 for i in range(n)]
+    edges = [(ids[i], ids[i + 1]) for i in range(n - 1)]
+    df = spark.createDataFrame(edges, "id_a long, id_b long")
+    for max_iters in (2, 3):
+        with pytest.raises(RuntimeError, match=f"after {max_iters} star rounds"):
+            dedup.connected_components(df, max_iters=max_iters)
+
+
+def test_connected_components_fixed_point_accept_is_exact(spark, cc_paths):
     """The r18 accept check verifies R(e) = e directly (R = small_star ∘
     large_star): on a graph that is ALREADY a star set, one fused step
     must suffice and the result must be idempotent — rerunning CC on the
@@ -981,13 +1041,17 @@ def test_connected_components_fixed_point_accept_is_exact(spark):
 
     edges = [(1, x) for x in (2, 3, 4)] + [(10, 11)] + [(20, 20)]
     df = spark.createDataFrame(edges, "id_a long, id_b long")
-    got = {r["id"]: r["component"] for r in connected_components(df).collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20}
-    again = spark.createDataFrame(
-        [(v, k) for k, v in got.items()], "id_a long, id_b long"
-    )
-    got2 = {r["id"]: r["component"] for r in connected_components(again).collect()}
-    assert got2 == got
+    for path in cc_paths():
+        got = {r["id"]: r["component"] for r in connected_components(df).collect()}
+        assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20}, path
+        again = spark.createDataFrame(
+            [(v, k) for k, v in got.items()], "id_a long, id_b long"
+        )
+        got2 = {r["id"]: r["component"] for r in connected_components(again).collect()}
+        assert got2 == got, path
+        # a star set is a fixed point before any round: zero rounds accept
+        zero = connected_components(df, max_iters=0)
+        assert {r["id"]: r["component"] for r in zero.collect()} == got, path
 
 
 def test_hashed_shingle_sets_match_string_space(spark):
